@@ -1,18 +1,17 @@
 """In-process RESP (Redis Serialization Protocol) server + client.
 
-The container ships neither a redis server nor redis-py, so the Redis
-sink's real-socket leg was env-gated and skipped (VERDICT r5 'What's
-missing' #2). RESP2 is a tiny framed protocol, so — the same way
+The container ships neither a redis server nor redis-py, and the Redis
+sink stages from executors, so it needs a server whose writes every
+process can see. RESP2 is a tiny framed protocol, so — the same way
 streaming/socket_source.py stood in for the ZMQ funnel — this module
 provides both ends over genuine TCP sockets:
 
 - :class:`MiniRedisServer`: a threaded accept-loop speaking enough RESP
   for the sink's command surface (HINCRBY/ZINCRBY/SADD, the staging
   HSET/HGETALL, SET NX markers, DEL, MULTI/EXEC transactions, plus the
-  read commands the integration test verifies with). State is applied
-  under one lock; EXEC applies the queued commands atomically — the same
-  all-or-nothing guarantee the sink's commit protocol relies on from a
-  real Redis.
+  read commands the tests verify with). State is applied under one lock;
+  EXEC applies the queued commands atomically — the same all-or-nothing
+  guarantee the sink's commit protocol relies on from a real Redis.
 - :class:`RespClient`: a dependency-free client with the redis-py
   surface ``RedisCounterSink`` needs (``from_url``, command methods,
   ``pipeline(transaction=)``), returning ``bytes`` replies exactly like
@@ -24,8 +23,11 @@ to executors and every partition opens its OWN socket — the distributed
 staging path (``foreachPartition`` pipelining over TCP) runs exactly as
 it would against a production Redis, just terminating in-process.
 
-This is a test/dev harness: single process, no persistence, no eviction.
-A production deployment points the same URL env at a real server.
+This pair is the sink's one backend in this repository: the sink tests,
+the model tests, the ``stream_redis_counters`` / ``snk_redis_resp``
+queries and the benchmark all run against it. It is single process, with
+no persistence and no eviction; a production deployment points the same
+URL env at a real server.
 """
 
 from __future__ import annotations
@@ -70,6 +72,10 @@ class _Reader:
         self._sock = sock
         self._buf = bytearray()
         self._pos = 0
+
+    def buffered(self) -> bool:
+        """Whether bytes already received are still unparsed."""
+        return self._pos < len(self._buf)
 
     def _compact(self) -> None:
         if self._pos >= self._COMPACT:
@@ -142,11 +148,27 @@ class _Handler(socketserver.BaseRequestHandler):
     happens under the server-wide lock (EXEC applies its whole queue
     inside one lock hold — atomic relative to every other connection)."""
 
+    #: flush held replies once this many are queued, even mid-burst
+    _FLUSH_REPLIES = 1024
+
     def handle(self) -> None:  # noqa: C901 - a protocol switch is a switch
         srv = self.server.mini  # type: ignore[attr-defined]
+        # Replies to the commands already read go out in ONE write once the
+        # read buffer is drained, as Redis writes once per event-loop pass,
+        # and TCP_NODELAY sends that write at once. One small write per
+        # reply (+OK, each +QUEUED, the EXEC array) under Nagle stalled
+        # every MULTI/EXEC on the client's delayed ACK, ~40 ms each.
+        self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         reader = _Reader(self.request)
+        out: list[bytes] = []
         txn: list[list[bytes]] | None = None
         while True:
+            if out and (not reader.buffered() or len(out) >= self._FLUSH_REPLIES):
+                # join once: += on bytes re-copies the whole reply per
+                # command (quadratic in queue length — the server-side
+                # twin of the _Reader re-slicing fix above)
+                self.request.sendall(b"".join(out))
+                out.clear()
             try:
                 parts = reader.reply()
             except (ConnectionError, OSError):
@@ -155,29 +177,26 @@ class _Handler(socketserver.BaseRequestHandler):
                 return
             cmd = parts[0].upper()
             if cmd == b"QUIT":
-                self.request.sendall(b"+OK\r\n")
+                out.append(b"+OK\r\n")
+                self.request.sendall(b"".join(out))
                 return
             if cmd == b"MULTI":
                 txn = []
-                self.request.sendall(b"+OK\r\n")
+                out.append(b"+OK\r\n")
                 continue
             if cmd == b"EXEC":
-                # join once: += on bytes re-copies the whole reply per
-                # command (quadratic in queue length — the server-side
-                # twin of the _Reader re-slicing fix above)
                 with srv.lock:
-                    parts_out = [b"*%d\r\n" % len(txn or [])]
+                    out.append(b"*%d\r\n" % len(txn or []))
                     for queued in txn or []:
-                        parts_out.append(srv.apply(queued))
+                        out.append(srv.apply(queued))
                 txn = None
-                self.request.sendall(b"".join(parts_out))
                 continue
             if txn is not None:
                 txn.append(parts)
-                self.request.sendall(b"+QUEUED\r\n")
+                out.append(b"+QUEUED\r\n")
                 continue
             with srv.lock:
-                self.request.sendall(srv.apply(parts))
+                out.append(srv.apply(parts))
 
 
 class MiniRedisServer:

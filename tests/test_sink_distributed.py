@@ -1,127 +1,34 @@
-"""Distributed staging path of the Redis sink (SURVEY.md §2.1 snk_*).
+"""The Redis sink end to end over a real RESP socket (SURVEY.md §2.1 snk_*).
 
-RedisCounterSink's production branch stages command rows from EXECUTORS via
-``foreachPartition`` + pipelined HSETs. FakeRedis can't see cross-process
-writes, so this test uses a filesystem-spooled staging client: executor-side
-pipelines land staged fields as atomically-renamed files (content-hash names
--> partition retries overwrite idempotently, exactly the HSET-overwrite
-contract), and the driver merges the spool for the commit transaction. The
-final counter state must equal what the driver-local FakeRedis path produces
-for the same batch.
+RedisCounterSink stages command rows from EXECUTORS via ``foreachPartition``
++ pipelined HSETs, each partition over its own TCP connection, then commits
+with one MULTI/EXEC on the driver. The final server state must equal what
+the registered DuckDB oracles of ``snk_redis_hash`` / ``_zset`` /
+``_paths`` / ``_uniq`` compute over the same batch.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 
+import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from bootic_stats_aggregates_spark.io import table
-from bootic_stats_aggregates_spark.sinks.redis_sink import (
-    FakeRedis,
-    RedisCounterSink,
-)
+from bootic_stats_aggregates_spark.registry import all_oracles
+from bootic_stats_aggregates_spark.sinks.redis_sink import RedisCounterSink
 
 from conftest import SF_DIR
 
-
-def _make_spool_client(root: str):
-    """A staging client whose HSET pipeline is visible across processes.
-
-    Defined inside a function so cloudpickle ships the classes BY VALUE to
-    executors (the tests/ directory is not importable from Spark workers).
-    """
-
-    class SpoolPipe:
-        def __init__(self) -> None:
-            self.ops: list[tuple[str, str, str]] = []
-
-        def hset(self, key, field, value):
-            self.ops.append((key, field, str(value)))
-            return self
-
-        def execute(self):
-            by_key: dict[str, dict[str, str]] = {}
-            for k, f, v in self.ops:
-                by_key.setdefault(k, {})[f] = v
-            for k, fields in by_key.items():
-                payload = json.dumps(
-                    {"key": k, "fields": dict(sorted(fields.items()))},
-                    sort_keys=True,
-                )
-                # content-hash filename: a retried partition re-writes the
-                # SAME file — the filesystem analog of HSET overwrite
-                name = hashlib.sha1(payload.encode()).hexdigest()
-                tmp = os.path.join(root, f".tmp-{name}-{os.getpid()}")
-                with open(tmp, "w") as fh:
-                    fh.write(payload)
-                os.replace(tmp, os.path.join(root, f"{name}.json"))
-            self.ops = []
-            return []
-
-    class SpoolRedis(FakeRedis):
-        """Live counters/markers stay in-process (driver); staging reads
-        merge the executor-written spool files."""
-
-        def pipeline(self, transaction: bool = True):
-            if transaction:
-                return super().pipeline(transaction=True)  # driver commit
-            return SpoolPipe()  # executor staging
-
-        def hgetall(self, key: str) -> dict:
-            merged: dict[str, str] = {}
-            for fn in sorted(os.listdir(root)):
-                if not fn.endswith(".json"):
-                    continue
-                with open(os.path.join(root, fn)) as fh:
-                    doc = json.load(fh)
-                if doc["key"] == key:
-                    merged.update(doc["fields"])
-            return merged
-
-        def delete(self, key: str) -> int:
-            for fn in list(os.listdir(root)):
-                path = os.path.join(root, fn)
-                if fn.endswith(".json"):
-                    with open(path) as fh:
-                        if json.load(fh)["key"] == key:
-                            os.remove(path)
-            return super().delete(key)
-
-    return SpoolRedis
+#: The smoke batch: events with ``event_id`` below this, plus one copy of
+#: event 0 whose ``event_type`` contains the staging-field separator ``|``.
+_BATCH_IDS = 2000
 
 
 @pytest.fixture
 def batch(spark):
-    return table(spark, SF_DIR, "events").limit(2000)
-
-
-def test_distributed_staging_matches_driver_path(spark, batch, tmp_path):
-    spool = str(tmp_path)
-    SpoolRedis = _make_spool_client(spool)
-    dist_client = SpoolRedis()
-    # the factory closure ships a pickled COPY to executors (which only use
-    # the spool-file pipeline); the driver's calls get the real instance
-    dist_sink = RedisCounterSink(lambda: dist_client, distributed=True)
-    dist_sink(batch, batch_id=7)
-
-    local_client = FakeRedis()
-    RedisCounterSink(lambda: local_client)(batch, batch_id=7)
-
-    assert dict(dist_client.hashes) == dict(local_client.hashes)
-    assert dict(dist_client.zsets) == dict(local_client.zsets)
-    assert dict(dist_client.sets) == dict(local_client.sets)
-    assert dist_client.hashes, "expected non-empty counter state"
-    # staging fully consumed; marker present
-    assert dist_client.hgetall("bootic:stage:7") == {}
-    assert dist_client.get("bootic:batch:7") is not None
-
-    # replay of the committed batch is a no-op
-    snapshot = {k: dict(v) for k, v in dist_client.hashes.items()}
-    dist_sink(batch, batch_id=7)
-    assert {k: dict(v) for k, v in dist_client.hashes.items()} == snapshot
+    return table(spark, SF_DIR, "events").where(F.col("event_id") < _BATCH_IDS)
 
 
 @pytest.fixture
@@ -144,49 +51,103 @@ def redis_url(monkeypatch):
     srv.close()
 
 
+def _oracle_state() -> dict:
+    """Redis state the registered oracles imply for the smoke batch."""
+    events = f"read_parquet('{SF_DIR}/events.parquet')"
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM {events} WHERE event_id < {_BATCH_IDS}"
+            f" UNION ALL SELECT * REPLACE ('a|b' AS event_type) FROM {events}"
+            " WHERE event_id = 0"
+        )
+        oracles = all_oracles()
+        state: dict = {"hashes": {}, "zsets": {}, "sets": {}}
+        for _, key, field, delta in con.execute(oracles["snk_redis_hash"]).fetchall():
+            state["hashes"].setdefault(key, {})[field.encode()] = str(delta).encode()
+        for qid in ("snk_redis_zset", "snk_redis_paths"):
+            for _, key, member, delta in con.execute(oracles[qid]).fetchall():
+                state["zsets"].setdefault(key, {})[member.encode()] = float(delta)
+        for _, key, member in con.execute(oracles["snk_redis_uniq"]).fetchall():
+            state["sets"].setdefault(key, set()).add(member.encode())
+    finally:
+        con.close()
+    return state
+
+
 def test_real_redis_server_smoke(spark, batch, redis_url):
     """End-to-end RedisCounterSink against a real RESP server socket
     (VERDICT r3 item 9 / r5 item 3): distributed executor-side staging
     (each partition pipelines over its own TCP connection), transactional
-    MULTI/EXEC commit, bytes-typed replies, idempotent replay — then
-    state equality against the FakeRedis driver path on the same batch."""
+    MULTI/EXEC commit, bytes-typed replies, idempotent replay — and state
+    equality with the registered oracles over the same batch. One event
+    carries ``event_type = 'a|b'``: its keys must land whole, not split at
+    the staging field's separator."""
     from bootic_stats_aggregates_spark.sinks.redis_sink import (
         client_factory_from_env,
     )
 
+    piped = batch.unionByName(
+        batch.where(F.col("event_id") == 0).withColumn("event_type", F.lit("a|b"))
+    )
     factory = client_factory_from_env()
-    assert factory is not FakeRedis, "redis-py missing despite URL set"
     client = factory()
     client.flushdb()  # dedicated test database per the env var contract
 
     sink = RedisCounterSink(factory, distributed=True)
-    sink(batch, batch_id=11)
+    sink(piped, batch_id=11)
 
-    expected = FakeRedis()
-    RedisCounterSink(lambda: expected)(batch, batch_id=11)
-
-    def _dec(b):
-        return b.decode() if isinstance(b, (bytes, bytearray)) else str(b)
-
-    for key, fields in expected.hashes.items():
-        if ":stage:" in key:
-            continue
-        got = {_dec(f): _dec(v) for f, v in client.hgetall(key).items()}
-        assert got == {f: str(v) for f, v in fields.items()}, key
-    for key, members in expected.zsets.items():
-        got = {
-            _dec(m): s for m, s in client.zrange(key, 0, -1, withscores=True)
-        }
-        assert got == {m: float(s) for m, s in members.items()}, key
-    for key, members in expected.sets.items():
-        got = {_dec(m) for m in client.smembers(key)}
-        assert got == set(members), key
+    expected = _oracle_state()
+    assert any("a|b" in k for k in expected["hashes"])
+    for key, fields in expected["hashes"].items():
+        assert client.hgetall(key) == fields, key
+    for key, members in expected["zsets"].items():
+        assert dict(client.zrange(key, 0, -1, withscores=True)) == members, key
+    for key, members in expected["sets"].items():
+        assert client.smembers(key) == members, key
     # marker present, staging consumed, replay is a no-op
     assert client.get("bootic:batch:11") is not None
     assert client.hgetall("bootic:stage:11") == {}
-    before = client.hgetall(next(iter(expected.hashes)))
-    sink(batch, batch_id=11)
-    assert client.hgetall(next(iter(expected.hashes))) == before
+    key = next(iter(expected["hashes"]))
+    before = client.hgetall(key)
+    sink(piped, batch_id=11)
+    assert client.hgetall(key) == before
+
+
+def test_sink_rejects_driver_side_staging():
+    """Staging is executor-side only: the one legal ``distributed`` is True."""
+    RedisCounterSink(lambda: None, distributed=True)
+    with pytest.raises(ValueError, match="distributed"):
+        RedisCounterSink(lambda: None, distributed=False)
+
+
+def test_client_factory_needs_url(monkeypatch):
+    from bootic_stats_aggregates_spark.sinks.redis_sink import (
+        REDIS_URL_ENV,
+        client_factory_from_env,
+    )
+
+    monkeypatch.delenv(REDIS_URL_ENV, raising=False)
+    with pytest.raises(RuntimeError, match=REDIS_URL_ENV):
+        client_factory_from_env()
+
+
+def test_sink_commands_single_scan_single_exchange(spark, batch):
+    """Every command family comes out of one plan: the executed plan of
+    ``sink_commands`` reads the batch once and shuffles once."""
+    from bootic_stats_aggregates_spark.sinks.redis_sink import sink_commands
+
+    cmds = sink_commands(batch)
+    cmds.write.format("noop").mode("overwrite").save()
+    plan = cmds._jdf.queryExecution().executedPlan().toString()
+    # under AQE the tree string holds the final plan, then the initial one
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    n_scans = sum("FileScan parquet" in ln for ln in lines)
+    n_exchanges = sum(
+        "Exchange" in ln and "Reused" not in ln and "QueryStage" not in ln
+        for ln in lines
+    )
+    assert (n_scans, n_exchanges) == (1, 1), plan
 
 
 def test_resp_protocol_semantics():
